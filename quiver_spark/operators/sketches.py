@@ -28,6 +28,14 @@ def _bucket_spark(row: int, key: str = "event_type") -> F.Column:
     )
 
 
+def _cells() -> F.Column:
+    """Generator of the {CM_DEPTH} (hrow, bucket) cells of each row's key."""
+    args = [F.lit(CM_DEPTH)]
+    for r in range(CM_DEPTH):
+        args += [F.lit(r), _bucket_spark(r)]
+    return F.stack(*args).alias("hrow", "bucket")
+
+
 def _bucket_sql(row: int, key: str = "event_type") -> str:
     return (
         f"(('0x' || substr(md5('{row}:' || {key}), 1, 8))::BIGINT % {CM_WIDTH})"
@@ -60,34 +68,25 @@ FROM est e JOIN exact x ON e.event_type = x.event_type
 def sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch of event_type frequencies: build the {CM_DEPTH}×{CM_WIDTH}
     counter grid, then point-query every distinct key and compare to the
-    exact count (estimate ≥ exact always; equality when no collisions)."""
+    exact count (estimate ≥ exact always; equality when no collisions).
+
+    BUILD is one pass over the raw events: a ``stack`` emits each event's
+    {CM_DEPTH} (hrow, bucket) cells into one groupBy. The exact counts are
+    one groupBy(event_type); its rows are the distinct keys, which probe
+    their cells through the same ``stack``, a broadcast join to the grid
+    and a min."""
     ev = load(spark, sf_dir, "events")
-    # BUILD: one pass per hash row (a single pass with posexplode of the d
-    # buckets would also work; per-row passes keep the plan obvious)
-    cells = None
-    for r in range(CM_DEPTH):
-        c = ev.groupBy(_bucket_spark(r).alias("bucket")).agg(
-            F.count(F.lit(1)).alias("c")
-        ).withColumn("hrow", F.lit(r))
-        cells = c if cells is None else cells.unionByName(c)
-    keys = ev.select("event_type").distinct()
-    # QUERY: each key probes its d cells (broadcast the tiny sketch)
-    probes = None
-    for r in range(CM_DEPTH):
-        p = keys.select(
-            "event_type",
-            F.lit(r).alias("hrow"),
-            _bucket_spark(r).alias("bucket"),
-        )
-        probes = p if probes is None else probes.unionByName(p)
-    est = (
-        probes.join(F.broadcast(cells), ["hrow", "bucket"])
-        .groupBy("event_type")
-        .agg(F.min("c").cast("bigint").alias("cm_estimate"))
+    cells = (
+        ev.select(_cells())
+        .groupBy("hrow", "bucket")
+        .agg(F.count(F.lit(1)).alias("c"))
     )
     exact = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("exact_cnt"))
-    return est.join(exact, "event_type").select(
-        "event_type", "exact_cnt", "cm_estimate"
+    return (
+        exact.select("event_type", "exact_cnt", _cells())
+        .join(F.broadcast(cells), ["hrow", "bucket"])
+        .groupBy("event_type", "exact_cnt")
+        .agg(F.min("c").cast("bigint").alias("cm_estimate"))
     )
 
 

@@ -8,6 +8,19 @@ Two entry styles:
 Scale posture: AQE on (runtime re-planning, skew-join splitting, partition
 coalescing), shuffle partitions sized for the local harness but overridable via
 env for cluster runs, Arrow enabled so pandas-UDF paths are vectorized.
+
+Python worker daemon: ``get_spark`` sets the static conf
+``spark.python.daemon.module`` to ``quiver_spark.pyworker``. PySpark calls
+``importlib.invalidate_caches()`` at the start of every task, and on
+CPython 3.11 that re-reads the central directory of every zip on the
+worker's ``sys.path`` (pyspark.zip, py4j, the shipped quiver_spark zip):
+50-150 ms per Python task, whatever the data size. CPython 3.12 made
+the re-read lazy (gh-103200); the daemon module makes it conditional on
+the archive having changed and then runs the stock ``pyspark.daemon``.
+It applies only to sessions built by ``get_spark``: a session someone
+else built keeps the stock daemon, since the conf cannot be set once the
+context is running. ``spark.python.worker.module`` is no alternative: the
+4.1 daemon ignores it unless the name starts with ``pyspark``.
 """
 
 from __future__ import annotations
@@ -87,6 +100,8 @@ def get_spark(app_name: str = "quiver-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("QUIVER_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
+        # see the module docstring: skip per-task zip directory re-reads
+        .config("spark.python.daemon.module", "quiver_spark.pyworker")
     )
     # JVM bulk-ingest writer ("quiverjvm"): spark.jars is a STATIC conf, so
     # the jar must ride the builder — attach when built (checked in; see

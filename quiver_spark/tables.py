@@ -152,6 +152,16 @@ def quiver_gate_size_bytes(table_dir: str) -> int | None:
         return None
 
 
+#: spread() gives each task at least this much input so the fixed cost of
+#: a Python task amortizes over real work. That cost is ~50 ms of executor
+#: run time for an identity mapInArrow over 500 rows on a 4-core host,
+#: most of it waiting on the JVM's Arrow stream. Measured at 32
+#: cores on the 594 KB documents scan: width 32 = 0.69 s, width 8 =
+#: 0.54 s, width 1 = 1.15 s. Capped at the session parallelism, so larger
+#: inputs scale back up to full width.
+SPREAD_MIN_TASK_BYTES = 64 * 1024
+
+
 def spread(
     df: DataFrame, spark: SparkSession, sf_dir: str, name: str
 ) -> DataFrame:
@@ -198,15 +208,7 @@ def spread(
     natural_splits = -(-nbytes // max(max_split, 1))
     if natural_splits >= cores:
         return df
-    # width: at least SPREAD_MIN_TASK_BYTES of input per task so the
-    # Python-worker roundtrip (~tens of ms) amortizes over real work —
-    # measured at 32 cores on the 594 KB documents scan: width 32 =
-    # 0.69 s, width 8 = 0.54 s, width 1 = 1.15 s. Capped at the session
-    # parallelism, so larger inputs scale back up to full width.
-    min_task = int(
-        os.environ.get("QUIVER_SPREAD_MIN_TASK_BYTES", 64 * 1024)
-    )
-    width = max(1, min(cores, nbytes // max(min_task, 1)))
+    width = max(1, min(cores, nbytes // SPREAD_MIN_TASK_BYTES))
     if width <= natural_splits or width == 1:
         return df
     return df.repartition(width)

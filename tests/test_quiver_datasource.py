@@ -817,7 +817,7 @@ def test_append_mode(spark, tmp_path):
 def test_narrow_projection_partitions_coalesce_by_projected_bytes(
     spark, tmp_path
 ):
-    """Default split planning sizes partitions by PROJECTED page bytes
+    """Split planning sizes partitions by PROJECTED page bytes
     with a dynamic floor (clamp(total/parallelism, 1 MiB,
     partition_bytes)): a 1-of-N-column projection must plan (far) fewer
     partitions than the full-width scan of the same file, because 32k
@@ -836,9 +836,19 @@ def test_narrow_projection_partitions_coalesce_by_projected_bytes(
     )
     write_table(t, str(d / "part-0.quiver"), WriteOptions())
     register(spark)
-    full = spark.read.format("quiver").load(str(d))
+    # pin the parallelism the floor divides by: the default is the
+    # planner host's cpu count, and with 4 or fewer cores both scans hit
+    # the same clamped floor and plan the same count
+    full = (
+        spark.read.format("quiver")
+        .option("planning_parallelism", "16")
+        .load(str(d))
+    )
     narrow = (
-        spark.read.format("quiver").option("columns", "c0").load(str(d))
+        spark.read.format("quiver")
+        .option("planning_parallelism", "16")
+        .option("columns", "c0")
+        .load(str(d))
     )
     nf = full.rdd.getNumPartitions()
     nn = narrow.rdd.getNumPartitions()

@@ -14,7 +14,7 @@ import os
 
 from conftest import SF_DIR, SF_DIR_MID
 
-from quiver_spark.tables import load, spread
+from quiver_spark.tables import SPREAD_MIN_TASK_BYTES, load, spread
 
 
 def _nparts(df):
@@ -26,11 +26,11 @@ def test_spread_widens_small_scan(spark):
     out = spread(base, spark, SF_DIR_MID, "documents")
     cores = spark.sparkContext.defaultParallelism
     nbytes = os.path.getsize(f"{SF_DIR_MID}/documents.parquet")
-    want = max(1, min(cores, nbytes // (64 * 1024)))
+    want = max(1, min(cores, nbytes // SPREAD_MIN_TASK_BYTES))
     if want > 1:
         assert _nparts(out) == want
     else:
-        # tiny input: the 64 KB rule says one task — unchanged plan
+        # tiny input: the min-task-bytes rule says one task — unchanged plan
         assert out is base
 
 
