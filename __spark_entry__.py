@@ -21,84 +21,75 @@ if _REPO not in sys.path:
 from quiver_spark.registry import load_all_operators  # noqa: E402
 
 # Registration order drives which queries a bounded correctness sample sees
-# first. Rotated per round so every operator gets a recent driver-green row.
-# Round 17 window (50), per the round-16 verdict's item 1 and the rotation
-# contract's clause (b) "queries whose ENGINE or SHAPE materially changed
-# this round" — REAPPLIED AT ROUND CLOSE, after the optimization work, so
-# the window covers what actually changed:
-# (a) the 24 round-16-rewritten queries that had no driver sf0.01 row yet
-#     (the r16 window was authored before those rewrites landed); most of
-#     this round's changes overlap this set (minhash/simhash/ngram pair
-#     streaming, spread front ends, canonical/clusters front-end effects),
-#     so clause (b) coverage rides along;
-# (b) the 12 remaining queries whose engine or shape materially changed in
-#     round 17 and are not already in (a): the three SemDeDup variants
-#     (streamed per-bucket pair scorer), the vectorized
-#     gopher/tfidf/lang_id/token_budget stats, the span-excision dup
-#     aggregate, the stream-scan state-partition sizing, and the three
-#     spread JVM passes (DSIR, PII scrub, moment aggregation);
-# (c) the first 14 of the 25 r12-stale rows promised to head this window
-#     (simple scan/relational/scalar rows, pytest-parity every round).
-# 24+12+14 = 50; position 51+ falls back to registry order. Deferred to
-# round 18 (r12-stale remainder; the last two already carry round-16
-# driver-green rows): scalar_math_funcs, scalar_string_funcs,
-# scalar_subquery_above_avg, setop_union_counts, text_bigram_topk,
-# text_type_token_ratio, text_zipf_slope, topk_orders,
-# unpivot_lineitem_metrics, approx_distinct_parts, text_repetition_stats.
+# first. Rotated per change so every operator gets a recent driver-green
+# row. Current window (50):
+# (a) the 11 r12-stale rows deferred from the previous window (scalar,
+#     set-op, top-k and text-statistics rows with no recent driver row);
+# (b) the four scans that used to call the Python DS's opt-in page /
+#     partition pruning directly and now read through sources.scan
+#     (the JVM reader prunes them), plus quiver_scan_q1 (the flagship
+#     quiver_table scan, no longer served from a relation cache) and
+#     agg_stats_moments (its spread() call was removed);
+# (c) every other quiver-format query whose read path moved onto the
+#     one router: quiver_table / quiver_relation callers, and the
+#     fixtures built by maintenance's compact, cluster_by and row-level
+#     DML, whose reads now go through sources.scan too — plus the two
+#     registry queries that exercise the router's options directly.
+# 11+6+33 = 50; position 51+ falls back to registry order.
 _PRIORITY = [
-    # (a) the 24 round-16 rewrites awaiting a driver sf0.01 row
-    "dedup_minhash_signature",
-    "dedup_minhash_pairs",
-    "dedup_clusters",
-    "dedup_canonical_docs",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_ngram_jaccard",
-    "dedup_winnow_pairs",
-    "text_winnow_fingerprints",
-    "text_char_lm_score",
-    "decontaminate_eval_overlap",
-    "decontaminate_embedding_overlap",
-    "embedding_kmeans_clusters",
-    "embedding_kmeans_cosine",
-    "embedding_pca_power_iteration",
-    "embedding_pca_top2_deflation",
-    "ann_ivf_topk",
-    "ann_pq_topk",
-    "ann_ivf_pq_topk",
-    "ann_pq_trained_topk",
-    "ann_lsh_buckets",
-    "ann_lsh_bucketed_pairs",
-    "embedding_near_dup",
-    "quiver_snapshot_diff",
-    # (b) round-17 engine/shape changes not already above
-    "dedup_semantic_semdedup",
-    "dedup_semantic_semdedup_cos",
-    "dedup_semantic_semdedup_collapsed",
-    "text_gopher_quality_filter",
-    "text_tfidf_topk",
-    "text_lang_id",
-    "sample_token_budget",
-    "dedup_span_excision",
-    "quiverjvm_stream_scan",
-    "sample_dsir_weights",
-    "text_pii_scrub",
+    # (a) deferred r12-stale rows
+    "scalar_math_funcs",
+    "scalar_string_funcs",
+    "scalar_subquery_above_avg",
+    "setop_union_counts",
+    "text_bigram_topk",
+    "text_type_token_ratio",
+    "text_zipf_slope",
+    "topk_orders",
+    "unpivot_lineitem_metrics",
+    "approx_distinct_parts",
+    "text_repetition_stats",
+    # (b) rerouted pruning scans, the flagship scan, agg_stats_moments
+    "quiver_partitioned_scan",
+    "quiver_clustered_scan",
+    "quiver_bloom_lookup_scan",
+    "quiver_zorder_scan",
+    "quiver_scan_q1",
     "agg_stats_moments",
-    # (c) 14 of the 25 promised r12-stale rows
-    "pipeline_mixture_weights",
-    "quiver_scan_bools",
-    "quiver_scan_decimals",
-    "quiver_scan_delta",
-    "quiver_scan_documents",
+    # (c) other reads moved onto sources.scan
+    "quiver_scan_checksums",
+    "quiver_adaptive_zstd_join",
+    "quiver_pruned_date_scan",
     "quiver_scan_embeddings",
+    "quiver_limit_head",
+    "quiver_scan_documents",
+    "quiver_scan_bools",
+    "quiver_scan_delta",
     "quiver_scan_freq",
     "quiver_scan_nested_types",
     "quiver_scan_uints",
+    "quiver_scan_decimals",
     "quiver_sql_view_agg",
-    "sample_per_source_topk",
-    "sample_stratified_docs",
-    "scalar_date_funcs",
-    "scalar_map_funcs",
+    "quiver_narrow_projection",
+    "quiver_batch_read",
+    "quiver_compacted_scan",
+    "quiver_inplace_compact_scan",
+    "quiver_scan_events",
+    "quiver_time_travel_scan",
+    "quiver_rollback_scan",
+    "quiver_manifest_packed_scan",
+    "quiver_merge_schemas_scan",
+    "quiver_manifest_rebuild_scan",
+    "quiver_delete_scan",
+    "quiver_update_scan",
+    "quiver_merge_upsert_scan",
+    "quiver_incremental_scan",
+    "quiver_merge_cdc_scan",
+    "quiver_alter_evolution_scan",
+    "quiver_check_constraint_scan",
+    "quiver_repartitioned_scan",
+    "quiver_unified_scan",
+    "quiver_write_unified_scan",
 ]
 
 

@@ -5,10 +5,11 @@ The reference persists NO statistics (PageMeta is only {length, num_values},
 src/lib.rs:75-80; src/stat.rs is a diagnostic, nothing stored), so predicate
 pushdown is impossible on bare files. We keep the data file byte-layout
 untouched and write a sidecar `<file>.stats.json` next to each `.quiver`
-file. Readers that don't know about the sidecar still work; readers that do
-prune page ranges before scheduling partitions — at 100 TB this is the
-difference between scanning everything and scanning the pages a selective
-predicate touches (same role as parquet row-group stats + zone maps).
+file. Readers that don't know about the sidecar still work; the JVM reader
+(QuiverPagePrune.java) prunes page ranges from it before scheduling
+partitions — at 100 TB this is the difference between scanning everything
+and scanning the pages a selective predicate touches (same role as parquet
+row-group stats + zone maps).
 
 Stored domains are chosen so JSON round-trips exactly and comparisons are
 branch-free:
@@ -17,13 +18,12 @@ branch-free:
 - strings: min is a 64-char prefix (a valid lower bound even when
   truncated); max is null when truncation would break the upper bound
 - date32/date64/timestamp/time/duration: the PHYSICAL int (days / millis /
-  unit ticks) — filter values are converted to the same physical domain
+  unit ticks) — the pruner converts filter values to the same domain
 - binary / nested / other: no stats (null entries, never pruned)
 """
 
 from __future__ import annotations
 
-import datetime
 import json
 import math
 import os
@@ -34,12 +34,6 @@ import pyarrow.compute as pc
 STATS_SUFFIX = ".stats.json"
 STATS_VERSION = 1
 _STR_CAP = 64
-
-_EPOCH = datetime.date(1970, 1, 1)
-_EPOCH_DT = datetime.datetime(1970, 1, 1)
-
-#: ticks per second for timestamp/time units
-_UNIT_SCALE = {"s": 1, "ms": 1_000, "us": 1_000_000, "ns": 1_000_000_000}
 
 
 def _physical_int_type(t: pa.DataType) -> pa.DataType | None:
@@ -92,8 +86,8 @@ def page_stats(arr: pa.Array) -> tuple[object, object, int, int | None]:
     if phys is not None:
         arr = arr.view(phys)
     if pa.types.is_floating(t):
-        # pc.min_max SKIPS NaN, so a finite max would let page_may_match
-        # prune gt/gte/eq pages even though Spark orders NaN above every
+        # pc.min_max SKIPS NaN, so a finite max would let the page pruner
+        # drop gt/gte/eq pages even though Spark orders NaN above every
         # value. Pages containing any NaN get null stats (never pruned).
         if bool(pc.any(pc.is_nan(arr)).as_py()):
             return None, None, nulls, None
@@ -251,90 +245,4 @@ def bloom_may_contain(page_b64: str, key: bytes) -> bool:
         idx = (h1 + i * h2) % m
         if not (bits[idx >> 3] >> (idx & 7)) & 1:
             return False
-    return True
-
-
-def to_physical(value, t: pa.DataType):
-    """Convert a filter value from Spark's Python domain into the sidecar's
-    stored domain. Returns NotImplemented when un-convertible (no pruning)."""
-    if value is None:
-        return NotImplemented
-    if pa.types.is_date32(t):
-        if isinstance(value, datetime.date) and not isinstance(
-            value, datetime.datetime
-        ):
-            return (value - _EPOCH).days
-        return NotImplemented
-    if pa.types.is_timestamp(t):
-        if isinstance(value, datetime.datetime):
-            if value.tzinfo is not None:
-                value = value.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-            delta = value - _EPOCH_DT
-            micros = (delta.days * 86_400 + delta.seconds) * 1_000_000 + delta.microseconds
-            scale = _UNIT_SCALE[t.unit]
-            return micros * scale // 1_000_000
-        return NotImplemented
-    if pa.types.is_integer(t) or pa.types.is_floating(t):
-        if isinstance(value, bool) or not isinstance(value, (int, float)):
-            return NotImplemented
-        return value
-    if pa.types.is_boolean(t):
-        return value if isinstance(value, bool) else NotImplemented
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return value if isinstance(value, str) else NotImplemented
-    return NotImplemented
-
-
-def _cmp_ok(a, b) -> bool:
-    """Comparable under the stored domain (numbers with numbers, etc.)."""
-    num = (int, float)
-    if isinstance(a, bool) != isinstance(b, bool):
-        return False
-    if isinstance(a, num) and isinstance(b, num):
-        return True
-    return type(a) is type(b)
-
-
-def page_may_match(op: str, value, lo, hi, nulls: int, num_values: int) -> bool:
-    """Conservative page predicate: False ONLY when no row can satisfy the
-    filter. `value` is already in the stored domain.
-
-    String max may be None (truncated) — upper-bound checks then pass."""
-    if op == "isnull":
-        return nulls > 0
-    if op == "isnotnull":
-        return nulls < num_values
-    # value comparisons are null-rejecting: an all-null page never matches
-    if nulls >= num_values:
-        return False
-    if lo is None:
-        return True  # no stats for this page
-    if op == "in":
-        for v in value:
-            if not _cmp_ok(v, lo):
-                return True
-            if v >= lo and (hi is None or v <= hi):
-                return True
-        return False
-    if not _cmp_ok(value, lo):
-        return True
-    if op == "eq":
-        return value >= lo and (hi is None or value <= hi)
-    if op == "gt":
-        return hi is None or hi > value
-    if op == "gte":
-        return hi is None or hi >= value
-    if op == "lt":
-        return lo < value
-    if op == "lte":
-        return lo <= value
-    if op == "startswith":
-        # page may hold a value in [value, next_prefix(value))
-        try:
-            prefix_hi = value[:-1] + chr(ord(value[-1]) + 1) if value else None
-        except ValueError:
-            prefix_hi = None
-        if prefix_hi is not None and lo >= prefix_hi:
-            return False
-        return hi is None or hi >= value
     return True

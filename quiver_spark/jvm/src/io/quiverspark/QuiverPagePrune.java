@@ -24,14 +24,15 @@ import org.apache.spark.sql.types.StructType;
 /**
  * Plan-time zone-map page pruning for the JVM scan — the engine-side stats
  * extension over the reference format (the reference persists NO statistics:
- * PageMeta is only {length, num_values}, src/lib.rs:75-80). Semantics mirror
- * the Python reader's format/stats.py::page_may_match EXACTLY: a page is
+ * PageMeta is only {length, num_values}, src/lib.rs:75-80), and the only
+ * reader that prunes (the Python DataSource is the unpruned fallback). The
+ * stored domains are format/stats.py's (the sidecar writer): a page is
  * skipped ONLY when no row can satisfy a pushed predicate, bounds with null
  * stats always match, string maxima may be null (64-char truncation on the
  * writer side) so upper-bound checks then pass, and value comparisons are
  * null-rejecting (an all-null page never matches eq/lt/gt).
  *
- * Conservative-by-construction choices beyond the Python reader:
+ * Conservative-by-construction choices:
  * - string pruning only fires when filter value AND stored bounds are pure
  *   ASCII — Java's UTF-16 code-unit order diverges from the sidecar's
  *   UTF-8/code-point order above the BMP, and a wrong prune is a lost row;
@@ -128,7 +129,7 @@ final class QuiverPagePrune {
   }
 
   /** Spark filter value → the sidecar's stored domain (format/stats.py
-   * to_physical): temporal values become physical ticks, numbers stay
+   * module docstring): temporal values become physical ticks, numbers stay
    * numbers, strings must be ASCII. Null = un-convertible (no pruning). */
   static Object toStored(Object v, DataType t) {
     if (v == null) return null;
@@ -336,7 +337,7 @@ final class QuiverPagePrune {
     return null;
   }
 
-  /** format/stats.py::page_may_match, verbatim semantics. */
+  /** May any row of a page with these bounds satisfy the predicate? */
   static boolean pageMayMatch(Pred pred, Object lo, Object hi, long nulls, long numValues) {
     String op = pred.op;
     if (op.equals("isnull")) return nulls > 0;

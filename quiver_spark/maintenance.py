@@ -108,7 +108,7 @@ def compact(
     by the cluster. Partitioned sources repartition on the partition
     columns so each output task writes into few subdirectories.
     """
-    from quiver_spark.sources import register as register_format
+    from quiver_spark.sources import register as register_format, scan
     from quiver_spark.sources.quiver_datasource import _discover_partitions
 
     if dst_dir is None:
@@ -123,7 +123,7 @@ def compact(
         part_cols = list(partition_by)
     n_out = max(1, math.ceil(rows / max(target_rows_per_file, 1)))
 
-    df = spark.read.format("quiver").load(src_dir)
+    df = scan(spark, src_dir)
     missing = [c for c in part_cols if c not in df.columns]
     if missing:
         raise ValueError(
@@ -251,10 +251,10 @@ def cluster_by(
     separates. On a hash-partitioned table every file's min/max spans the
     whole domain and a point/range predicate touches every file; after
     clustering the same predicate touches O(selectivity) files. That
-    drives BOTH scan pruning (``page_prune``) and the row-level DML ops
-    (:func:`delete_where` & co rewrite only candidate files — measured
-    in BASELINE.md round 9: the same DELETE rewrites 256 files before
-    clustering, ~2 after). The rewrite itself is one Spark job — a
+    drives BOTH scan pruning (the JVM reader's zone maps) and the
+    row-level DML ops (:func:`delete_where` & co rewrite only candidate
+    files — measured in BASELINE.md round 9: the same DELETE rewrites 256
+    files before clustering, ~2 after). The rewrite itself is one Spark job — a
     range shuffle sized to the output layout, `repartitionByRange` +
     `sortWithinPartitions`, Spark's own global-sort posture.
 
@@ -263,7 +263,7 @@ def cluster_by(
     clustering is what makes sorted encodings and stats pruning reachable
     for real tables; the format itself has no table layer (src/lib.rs).
     """
-    from quiver_spark.sources import register as register_format
+    from quiver_spark.sources import register as register_format, scan
     from quiver_spark.sources.quiver_datasource import _discover_partitions
 
     if not columns:
@@ -277,7 +277,7 @@ def cluster_by(
     part_cols = [c for c, _k in _discover_partitions(src_dir)[0]]
     n_out = max(1, math.ceil(rows / max(target_rows_per_file, 1)))
 
-    df = spark.read.format("quiver").load(src_dir)
+    df = scan(spark, src_dir)
     missing = [c for c in columns if c not in df.columns]
     if missing:
         raise ValueError(f"cluster columns not in schema: {missing}")
@@ -1585,39 +1585,38 @@ def _predicate_columns(names: list[str], *exprs: str) -> list[str]:
 
 def _touched_files(spark, table: str, predicate: str) -> list[str]:
     """Relative names of every file that MAY hold a row matching
-    ``predicate`` — one pruned scan: zone-map page pruning + Hive
-    partition pruning drop non-candidate files at plan time, the scan
-    decodes only the predicate's columns, and the collected result is at
-    most one row per file (never row data). At 100 TB with a selective
-    predicate this reads candidate pages only."""
+    ``predicate`` — one scan through the router: on the JVM lane Hive
+    partition pruning and zone-map/bloom page pruning drop non-candidate
+    files at plan time, the scan decodes only the predicate's columns,
+    and the collected result is at most one row per file (never row
+    data). At 100 TB with a selective predicate this reads candidate
+    pages only. Tables the JVM cannot serve with file identity (a data
+    column named ``_quiver_file``) fall back to an unpruned Python DS
+    scan with the same result."""
     from pyspark.sql import functions as F
     from pyspark.errors import AnalysisException
 
-    def scan(cols: list[str] | None):
-        r = (
-            spark.read.format("quiver")
-            .option("file_column", _FILE_COL)
-            .option("page_prune", "true")
-            .option("partition_prune", "true")
-        )
+    from quiver_spark.sources import scan
+
+    def touched(cols: list[str] | None):
+        opts = {"file_column": _FILE_COL}
         if cols is not None:
-            r = r.option("columns", ",".join(cols + [_FILE_COL]))
-        df = r.load(table)
+            opts["columns"] = ",".join(cols + [_FILE_COL])
         return (
-            df.filter(F.expr(predicate))
+            scan(spark, table, **opts)
+            .filter(F.expr(predicate))
             .select(_FILE_COL)
             .distinct()
             .collect()
         )
 
-    probe = spark.read.format("quiver").load(table)
-    cols = _predicate_columns(probe.columns, predicate)
+    cols = _predicate_columns(scan(spark, table).columns, predicate)
     try:
-        rows = scan(cols)
+        rows = touched(cols)
     except AnalysisException:
         # predicate references something the word-heuristic missed
         # (aliased/quoted oddly): retry with every column projected
-        rows = scan(None)
+        rows = touched(None)
     return sorted(r[0] for r in rows)
 
 
@@ -1698,7 +1697,7 @@ def delete_where(spark, table: str, predicate: str, **options: str) -> dict:
     """
     from pyspark.sql import functions as F
 
-    from quiver_spark.sources import register as register_format
+    from quiver_spark.sources import register as register_format, scan
 
     register_format(spark)
     gen, root, all_files = _snapshot(table)
@@ -1713,11 +1712,7 @@ def delete_where(spark, table: str, predicate: str, **options: str) -> dict:
         }
     tset = set(touched)
     untouched = [f for f in all_files if f not in tset]
-    src = (
-        spark.read.format("quiver")
-        .option("files", json.dumps(touched))
-        .load(table)
-    )
+    src = scan(spark, table, files=json.dumps(touched))
     fast = _partition_only_predicate(spark, root, predicate)
     if fast:
         # Partition-drop fast path: the predicate binds against the
@@ -1754,7 +1749,7 @@ def update_where(
     declared type, so a rewrite can never drift the table schema."""
     from pyspark.sql import functions as F
 
-    from quiver_spark.sources import register as register_format
+    from quiver_spark.sources import register as register_format, scan
 
     register_format(spark)
     gen, root, all_files = _snapshot(table)
@@ -1769,11 +1764,7 @@ def update_where(
         }
     tset = set(touched)
     untouched = [f for f in all_files if f not in tset]
-    src = (
-        spark.read.format("quiver")
-        .option("files", json.dumps(touched))
-        .load(table)
-    )
+    src = scan(spark, table, files=json.dumps(touched))
     unknown = sorted(set(assignments) - set(src.columns))
     if unknown:
         raise ValueError(f"UPDATE assigns to unknown columns: {unknown}")
@@ -1830,11 +1821,11 @@ def merge_upsert(
     a no-op (anti-join semantics), matching SQL MERGE."""
     from pyspark.sql import functions as F
 
-    from quiver_spark.sources import register as register_format
+    from quiver_spark.sources import register as register_format, scan
 
     register_format(spark)
     gen, root, all_files = _snapshot(table)
-    tgt = spark.read.format("quiver").load(table)
+    tgt = scan(spark, table)
     missing = [c for c in on if c not in tgt.columns]
     if missing:
         raise ValueError(f"merge keys not in target schema: {missing}")
@@ -1887,11 +1878,11 @@ def merge_upsert(
     # anti-join: a deleted key's rows are dropped from the rewrite and
     # simply not re-inserted
     keys = source.select(*on).distinct()
-    det = (
-        spark.read.format("quiver")
-        .option("file_column", _FILE_COL)
-        .option("columns", ",".join(list(on) + [_FILE_COL]))
-        .load(table)
+    det = scan(
+        spark,
+        table,
+        file_column=_FILE_COL,
+        columns=",".join(list(on) + [_FILE_COL]),
     )
     touched = sorted(
         r[0]
@@ -1909,11 +1900,8 @@ def merge_upsert(
         ]
     )
     if touched:
-        kept = (
-            spark.read.format("quiver")
-            .option("files", json.dumps(touched))
-            .load(table)
-            .join(keys, on=on, how="left_anti")
+        kept = scan(spark, table, files=json.dumps(touched)).join(
+            keys, on=on, how="left_anti"
         )
         out = kept.unionByName(aligned)
     else:

@@ -404,12 +404,12 @@ def quiver_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     HASH-SCATTERED (every file's o_orderkey min/max spans the domain —
     zone maps useless), is then sort-clustered on o_orderkey in place
     (atomic generation swap; `repartitionByRange` + sorted files), and a
-    narrow key-range aggregate reads it with page pruning on. The oracle
-    is the parquet original, so a row lost/doubled by the cluster
-    rewrite, or a page wrongly pruned from the clustered layout,
-    hash-fails. Clustering is what makes zone-map pruning and file-
-    minimal row-level DML reachable for real tables (BASELINE.md round-9
-    DML-at-scale table)."""
+    narrow key-range aggregate reads it through the router, whose JVM
+    reader prunes pages. The oracle is the parquet original, so a row
+    lost/doubled by the cluster rewrite, or a page wrongly pruned from
+    the clustered layout, hash-fails. Clustering is what makes zone-map
+    pruning and file-minimal row-level DML reachable for real tables
+    (BASELINE.md round-9 DML-at-scale table)."""
 
     def build(d: str) -> None:
         from quiver_spark import maintenance
@@ -423,11 +423,7 @@ def quiver_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     d = _marker_dir(spark, sf_dir, "orders-clustered", build)
-    o = (
-        spark.read.format("quiver")
-        .option("page_prune", "true")
-        .load(d)
-    )
+    o = quiver_relation(spark, d)
     return (
         o.filter((F.col("o_orderkey") >= 500) & (F.col("o_orderkey") <= 1500))
         .groupBy("o_orderstatus")
@@ -454,11 +450,12 @@ def quiver_bloom_lookup_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-page BLOOM data skipping through the driver gate: orders lands
     HASH-SCATTERED with `.option("bloom_columns", "o_orderkey")` — every
     page's min/max spans the whole key domain, so zone maps prune
-    nothing — and a 5-key point lookup reads it with page pruning on.
+    nothing — and a 5-key point lookup reads it through the router, whose
+    JVM reader prunes pages on the blooms.
     Blooms have no false negatives by construction, so a key lost to a
     wrongly-pruned page hash-fails against the parquet oracle. Engine
-    surface: stats.page_bloom / bloom_may_contain (sidecar-stored,
-    manifest-served); the reference format stores no statistics at all
+    surface: stats.page_bloom (sidecar-stored, manifest-served) and the
+    JVM reader's bloom probe (QuiverPagePrune.java); the reference format stores no statistics at all
     (src/lib.rs:75-80) — blooms extend the same sidecar zone maps carry."""
 
     def build(d: str) -> None:
@@ -475,11 +472,7 @@ def quiver_bloom_lookup_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     d = _marker_dir(spark, sf_dir, "orders-bloomed", build)
-    o = (
-        spark.read.format("quiver")
-        .option("page_prune", "true")
-        .load(d)
-    )
+    o = quiver_relation(spark, d)
     return o.filter(
         F.col("o_orderkey").isin(3, 41, 500, 999, 1203)
     ).select("o_orderkey", "o_orderstatus", "o_orderpriority")
@@ -504,8 +497,8 @@ def quiver_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-interleave of 16-bit linear codes, one range shuffle — and the
     query filters the TRAILING dimension (l_partkey), the case a
     lexicographic sort cannot prune (every file would span the partkey
-    domain) but Z-order locality can. Page pruning on; the oracle is the
-    parquet original, so a row lost/doubled by the Z rewrite or a page
+    domain) but Z-order locality can. The router's JVM reader prunes
+    pages; the oracle is the parquet original, so a row lost/doubled by the Z rewrite or a page
     wrongly pruned hash-fails. Pinned structurally by
     `test_zorder_clustering_prunes_on_every_column`."""
 
@@ -525,11 +518,7 @@ def quiver_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     d = _marker_dir(spark, sf_dir, "lineitem-zordered", build)
-    li = (
-        spark.read.format("quiver")
-        .option("page_prune", "true")
-        .load(d)
-    )
+    li = quiver_relation(spark, d)
     return (
         li.filter(
             (F.col("l_partkey") >= 50) & (F.col("l_partkey") <= 150)

@@ -44,12 +44,7 @@ FROM sums
 )
 def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stddev / variance / correlation from exact decimal moment sums."""
-    from quiver_spark.tables import spread
-
-    # round 17: spread the (1-3 split) gate-SF lineitem scan before the
-    # six-way exact-decimal moment aggregation (guide §2.5); decimal
-    # sums are exact — partition-invariant
-    li = spread(load(spark, sf_dir, "lineitem"), spark, sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     q, p = dec("l_quantity", "decimal(18,2)"), dec("l_extendedprice", "decimal(18,2)")
     sums = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),

@@ -55,8 +55,6 @@ RUNTIME_CONFS: dict[str, str] = {
     # present in 4.1.2) independently caps batch BYTES, so the records
     # cap only governs narrow tables.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "200000",
-    # Let Python DataSources receive pushed filters (quiver page pruning).
-    "spark.sql.python.filterPushdown.enabled": "true",
 }
 
 

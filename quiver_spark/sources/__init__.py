@@ -8,10 +8,12 @@ from quiver_spark.sources.quiver_datasource import (  # noqa: F401
     ship_package,
 )
 
-#: semantic reader options the JVM engine serves natively (round 13 —
-#: VERDICT r12 Next #1/#3): all driver-side-resolvable, so they no longer
-#: pin a scan to the Python DS's many-small-files floor. Everything else
-#: (file_column, limit, partition_rows, page_prune, …) stays Python-DS.
+#: semantic reader options the JVM engine serves natively: all
+#: driver-side-resolvable (time travel, CDC cursor, rewrite subsets,
+#: schema merge). Together with JVM_TRANSLATED_OPTS they are every option
+#: an internal read passes; anything else (the Python-only split knobs
+#: partition_rows, partition_bytes, min_partition_bytes,
+#: planning_parallelism, verify_checksums) pins a scan to the Python DS.
 JVM_SEMANTIC_OPTS = frozenset(
     {"version", "changes_since", "files", "merge_schemas"}
 )
@@ -35,33 +37,35 @@ JVM_TRANSLATED_OPTS = frozenset({"columns", "limit", "file_column"})
 
 
 def scan(spark, path: str, **options):
-    """Unified quiver scan — ONE entry point that routes to the fastest
-    engine able to serve the table correctly:
+    """Unified quiver scan — the ONE router every internal quiver read
+    (registry queries, ``quiver_relation``, maintenance's compaction,
+    clustering and row-level DML) goes through. It decides which engine
+    serves the read, and with it whether the read prunes:
 
     - **quiverjvm** (the Java DataSourceV2 columnar reader): flat AND
       nested schemas, plain/generation/Hive layouts, ALTER-DDL tables,
-      plus (round 13) the semantic reader options ``version`` (time
-      travel), ``changes_since`` (CDC cursor), ``files`` (rewrite
-      subsets), and ``merge_schemas`` — manifest-served planning,
-      zone-map + bloom page pruning, Catalyst column pruning, no
-      JVM→Python boundary (sf0.1: 0.19-0.50x of the parquet control vs
-      the Python DS's ~1.4-2x planner-floor proxies) — and (round 14)
-      the translated options ``columns=`` / ``limit=`` /
-      ``file_column=``, which become Catalyst ``select`` / ``limit`` /
-      a select of the ``_quiver_file`` metadata column.
-    - **python "quiver" DS** fallback: everything semantic the JVM reader
-      refuses — exotic leaf shapes (half floats, decimal256), unfillable
-      defaults — plus any reader option outside
-      JVM_SEMANTIC_OPTS | JVM_TRANSLATED_OPTS (explicit split knobs,
-      page_prune, …), which only the Python DS implements, and tables
-      whose DATA carries a ``_quiver_file`` column when file identity is
-      requested.
+      the semantic reader options ``version`` (time travel),
+      ``changes_since`` (CDC cursor), ``files`` (rewrite subsets) and
+      ``merge_schemas``, and the translated options ``columns=`` /
+      ``limit=`` / ``file_column=``, which become Catalyst ``select`` /
+      ``limit`` / a select of the ``_quiver_file`` metadata column. It
+      prunes on every scan — Hive partitions, manifest-inlined zone maps
+      and per-page blooms — plus Catalyst column pruning, with no
+      JVM→Python boundary.
+    - **python "quiver" DS** fallback, which never prunes (Spark applies
+      every filter row-level above it, so results are the same): what the
+      JVM reader refuses — exotic leaf shapes (half floats, decimal256),
+      unfillable defaults — tables whose DATA carries a ``_quiver_file``
+      column when file identity is requested, and any reader option
+      outside JVM_SEMANTIC_OPTS | JVM_TRANSLATED_OPTS (the Python-only
+      split knobs).
 
     Eligibility is probed against the REAL JVM guards (one driver-side
     manifest read via QuiverJvmRead.inferTableSchema) — not a Python-side
-    re-implementation that could drift — and a failed probe or un-attachable
-    jar degrades silently to the Python DS: routing never changes results,
-    only the engine that produces them.
+    re-implementation that could drift — and a guard refusal or an
+    un-attachable jar degrades to the Python DS (a genuine probe fault
+    warns first): routing never changes results, only the engine that
+    produces them.
     """
     register(spark)
     if set(options) <= JVM_SEMANTIC_OPTS | JVM_TRANSLATED_OPTS:

@@ -28,52 +28,29 @@ Column pruning: Spark's Python DataSource API CANNOT push required columns
 (verified by javap of spark-sql_2.13-4.1.2.jar; there is no
 SupportsPushDownRequiredColumns path to Python) — so the reader accepts an
 explicit `columns` option (comma list) and executors open + decode ONLY
-those leaves. quiver_table(columns=...) in operators/format_queries.py
-wires the statically-known list from every registered recipe; without it a
-narrow projection decodes full row width (measured 4.0x vs parquet on a
-1-of-16-column sf0.1 scan; 1.5x with the option).
+those leaves; without it a narrow projection decodes full row width
+(measured 4.0x vs parquet on a 1-of-16-column sf0.1 scan; 1.5x with the
+option).
 
 Hive-style partitioned layout: `.option("partition_by", "a,b")` on write
 fans rows into `a=v1/b=v2/part-*.quiver` subdirectories (partition columns
 dropped from the files); reads discover `col=value` segments, type them
-(long/double/string, Spark's inference subset), re-attach them as constant
-columns, and — opt-in via `partition_prune=true`, same plan-cache caveat
-as page_prune — skip non-matching FILES before any byte of them is read.
-That directory pruning is the 100 TB scan story: a filter on the partition
-key costs O(matching files), not O(dataset).
+(long/double/string, Spark's inference subset) and re-attach them as
+constant columns.
+
+Pruning lives in ONE reader: the JVM DSv2 engine (`quiverjvm`) prunes
+zone maps, blooms and Hive partitions on every scan, and `sources.scan`
+routes every internal read there when the table is eligible. This reader
+is the UNPRUNED fallback for what the JVM refuses (half floats,
+decimal256, a data column named `_quiver_file` when file identity is
+asked for, streaming reads): it accepts no pushed filters, every planned
+partition depends only on static options, and Spark applies every filter
+row-level above the scan — so a loaded relation is safe to reuse across
+differently-filtered queries.
 
 Registration ships the package to Python workers via a zip + addPyFile, so
 the source works in any session (the driver harness's included) without
 PYTHONPATH assumptions.
-
-SHARP EDGE — Spark's PythonDataSourceV2 caches the planned read
-(partitions + read command) on the Table object and the most recent
-filter-pushdown build OVERWRITES it, so re-using one loaded DataFrame
-across differently-filtered queries can replay a previous query's page
-pruning (verified on 4.1.2 with the trace hook below: the second full scan
-after a filtered count does no Python planning at all and returns the
-filtered query's partitions). Round-6 bytecode read of the 4.1.2 jar
-pinned the mechanism exactly: PythonDataSourceV2 holds ONE mutable
-`readInfo` slot; every pushdown build (PythonScanBuilder.pushFilters →
-FilterPushdownRunner) re-plans in Python and overwrites the slot, while a
-build with ZERO pushable filters goes through
-PythonBatch.infoInPython → getOrCreateReadInfo, which returns the slot
-as-is whenever it is non-null. Consequences, both trace-verified:
-(a) a DIFFERENTLY-filtered query on a reused DataFrame re-plans and is
-always correct — the danger is exclusively a no-pushable-filter query
-after a filtered one; (b) nothing Python-side runs during the stale
-replay, so no fingerprint/degrade scheme in this file can detect it —
-a pruning-on default is unsound until Spark keys or clears `readInfo`
-per pushed-filter set. tests/test_quiver_datasource.py pins the
-counterexample as a sentinel: when upstream fixes the caching, that test
-fails and the default can flip to on. Zone-map page pruning is therefore OPT-IN
-(`.option("page_prune", "true")`): the default build never prunes, so a
-replayed plan still covers every page and Spark's row-level filters keep
-results correct — which also makes a pruning-off relation safe to REUSE
-across arbitrarily-filtered queries (its partitions depend only on static
-options). The engine's quiver_table() exploits both sides: unsorted tables
-get one cached, reusable, pruning-off relation (skipping the per-load
-Python round trip); sorted tables get a fresh page_prune relation per call.
 """
 
 from __future__ import annotations
@@ -100,9 +77,9 @@ from pyspark.sql.types import StructType
 FORMAT_NAME = "quiver"
 # Measured on an idle local[32] host at sf0.1 (600k-row lineitem, min of 5
 # interleaved with a fresh-load parquet control at 0.310 s, r5 protocol).
-# With the relation reused across queries (the catalog pattern the engine's
-# quiver_table() implements — a fresh .load() per query pays a ~0.25 s
-# Python-worker round trip for datasource instantiation + schema()):
+# With the relation reused across queries (the catalog pattern — a fresh
+# .load() per query pays a ~0.25 s Python-worker round trip for
+# datasource instantiation + schema()):
 #   rows=32k  merge=false 0.94x   merge=true 0.96x
 #   rows=48k  merge=false 0.94x   merge=true 1.03x
 #   rows=64k  merge=false 1.03x   merge=true 1.00x
@@ -376,41 +353,6 @@ def _part_segment(v) -> str:
     return urllib.parse.quote(str(v), safe="")
 
 
-def _part_matches(filters, values: dict) -> bool:
-    """Exact evaluation of pushed filters against one file's partition
-    values (directory-level pruning — the file analogue of zone maps)."""
-    for col, op, fv in filters:
-        v = values.get(col)
-        try:
-            if op == "isnull":
-                ok = v is None
-            elif op == "isnotnull":
-                ok = v is not None
-            elif v is None:
-                ok = False
-            elif op == "eq":
-                ok = v == fv
-            elif op == "gt":
-                ok = v > fv
-            elif op == "gte":
-                ok = v >= fv
-            elif op == "lt":
-                ok = v < fv
-            elif op == "lte":
-                ok = v <= fv
-            elif op == "in":
-                ok = v in list(fv)
-            elif op == "startswith":
-                ok = isinstance(v, str) and v.startswith(fv)
-            else:
-                ok = True
-        except TypeError:
-            ok = True  # incomparable types → cannot prune safely
-        if not ok:
-            return False
-    return True
-
-
 #: (path, mtime_ns, size) → (arrow schema, leaf metas). The reference
 #: pre-reads a 64 KiB footer tail to save object-store round-trips
 #: (src/read/reader.rs:33,180-213); the Spark-side analogue is caching the
@@ -609,7 +551,7 @@ class QuiverDataSource(DataSource):
             # each row carries its source file's path relative to the
             # resolved data root — the hook row-level rewrites (DELETE/
             # UPDATE/MERGE) use to find which files a predicate touches
-            # with ONE pruned scan instead of bespoke footer walks
+            # with ONE scan instead of bespoke footer walks
             import pyarrow as pa
 
             if fcol in arrow_schema.names:
@@ -732,20 +674,6 @@ def _spark_schema(schema):
     return pa.schema([_spark_field(f) for f in schema])
 
 
-#: pushed-filter → (op tag used by stats.page_may_match, has value)
-_FILTER_OPS = {
-    "EqualTo": "eq",
-    "GreaterThan": "gt",
-    "GreaterThanOrEqual": "gte",
-    "LessThan": "lt",
-    "LessThanOrEqual": "lte",
-    "In": "in",
-    "IsNull": "isnull",
-    "IsNotNull": "isnotnull",
-    "StringStartsWith": "startswith",
-}
-
-
 def _trace(ev: str, reader, **extra) -> None:
     """Planning-lifecycle trace (QUIVER_TRACE=<path>): appends one JSON line
     per reader event from whatever process runs it. Debug aid for Spark's
@@ -764,9 +692,6 @@ def _trace(ev: str, reader, **extra) -> None:
                     "ts": round(_time.time(), 4),
                     "reader_id": id(reader),
                     "pid": os.getpid(),
-                    "filters": [
-                        (c, op, str(v)) for c, op, v in reader._prune_filters
-                    ],
                     **extra,
                 }
             )
@@ -863,21 +788,6 @@ class QuiverScanReader(DataSourceReader):
         self.partition_bytes = int(
             options.get("partition_bytes", DEFAULT_PARTITION_BYTES)
         )
-        # Zone-map page pruning is OPT-IN (page_prune=true): Spark's
-        # PythonDataSourceV2 plan cache can replay a filtered build's pruned
-        # partitions for a later unfiltered query on the same DataFrame (see
-        # module SHARP EDGE note), so the default keeps every page and lets
-        # Spark's row-level filters do the work. The engine's own
-        # quiver_table() opts in because it builds a fresh relation per call.
-        self.page_prune = options.get("page_prune", "false").lower() == "true"
-        # Directory-level Hive-partition pruning — same plan-cache sharp
-        # edge as page_prune (a replayed filtered plan would drop files for
-        # a later unfiltered query), so equally OPT-IN.
-        self.partition_prune = (
-            options.get("partition_prune", "false").lower() == "true"
-        )
-        # (column, op, value) predicates over Hive partition columns
-        self._part_filters: list[tuple[str, str, object]] = []
         # Row-budget LIMIT short-circuit (the engine analogue of the
         # reference's nth/skip_page, src/read/reader.rs:91-146): Spark's
         # Python DS API has no pushLimit, so `.option("limit", N)` caps BOTH
@@ -892,145 +802,11 @@ class QuiverScanReader(DataSourceReader):
         self.verify_checksums = (
             options.get("verify_checksums", "true").lower() == "true"
         )
-        # (column, op, physical value) predicates usable for page pruning
-        self._prune_filters: list[tuple[str, str, object]] = []
         _trace(
             "init",
             self,
             opts={str(k): str(v) for k, v in dict(options).items()},
         )
-
-    def pushFilters(self, filters):  # noqa: N802 (Spark API name)
-        """Collect zone-map-usable filters for page pruning. Every filter is
-        returned (Spark re-applies them row-level) because pruning is
-        page-granular — the same contract as parquet row-group stats."""
-        from quiver_spark.format import stats as stats_mod
-
-        # Snapshot once: the API contract allows an iterator, and consuming
-        # it twice (trace below + return) would hand Spark an empty list —
-        # i.e. silently claim every filter was fully applied at the source.
-        filters = list(filters)
-        if self.partition_prune:
-            part_cols, _ = _discover_partitions(self.path)
-            part_names = {c for c, _k in part_cols}
-            for flt in filters:
-                op = _FILTER_OPS.get(type(flt).__name__)
-                attr = getattr(flt, "attribute", None)
-                if (
-                    op is not None
-                    and attr is not None
-                    and len(attr) == 1
-                    and attr[0] in part_names
-                ):
-                    self._part_filters.append(
-                        (attr[0], op, getattr(flt, "value", None))
-                    )
-        if not self.page_prune:
-            _trace("push", self, n_in=len(filters), pruning="off")
-            return filters
-        from .manifest import load_manifest
-
-        files = _list_files(self.path)
-        arrow_schema = None
-        man = load_manifest(self.path)
-        if man is not None and man.table_schema() is not None:
-            # declared (evolved) schema: filters arrive on DECLARED names;
-            # types are identical to the physical column's (renames never
-            # change type), so pruning-value conversion stays exact
-            arrow_schema = man.table_schema()
-        elif files and os.path.exists(files[0]):
-            arrow_schema, _ = _footer_of(man, files[0])
-        for flt in filters:
-            op = _FILTER_OPS.get(type(flt).__name__)
-            attr = getattr(flt, "attribute", None)
-            if (
-                op is None
-                or arrow_schema is None
-                or attr is None
-                or len(attr) != 1
-                or attr[0] not in arrow_schema.names
-            ):
-                continue
-            col = attr[0]
-            t = arrow_schema.field(arrow_schema.names.index(col)).type
-            if op in ("isnull", "isnotnull"):
-                self._prune_filters.append((col, op, None))
-            elif op == "in":
-                vals = [stats_mod.to_physical(v, t) for v in flt.value]
-                if all(v is not NotImplemented for v in vals) and vals:
-                    self._prune_filters.append((col, op, vals))
-            else:
-                v = stats_mod.to_physical(flt.value, t)
-                if v is not NotImplemented:
-                    self._prune_filters.append((col, op, v))
-        # every filter is "unsupported" for exact evaluation → Spark keeps
-        # the row-level Filter; we only used them to prune pages
-        _trace("push", self, n_in=len(filters))
-        return filters
-
-    def _page_keep_mask(
-        self, file: str, n_pages: int, man=None
-    ) -> list[bool]:
-        """Evaluate pruning predicates against the file's stats sidecar
-        (served from the commit-time manifest when it covers the file —
-        a valid entry's ``sidecar`` is authoritative, including None,
-        because the manifest is written after sidecars land)."""
-        from quiver_spark.format import stats as stats_mod
-
-        keep = [True] * n_pages
-        if not self._prune_filters:
-            return keep
-        ent = man.lookup(file) if man is not None else None
-        if ent is not None:
-            sidecar = ent.sidecar
-        else:
-            sidecar = stats_mod.load_sidecar(file)
-        if sidecar is None:
-            return keep
-        cols = sidecar.get("columns", {})
-        page_rows = sidecar.get("page_rows", [])
-        if len(page_rows) != n_pages:
-            return keep
-        # sidecar stats are keyed by the file's PHYSICAL column names;
-        # filters arrive on declared names — resolve renamed columns
-        # through the file's map so pruning keeps working after an ALTER
-        cmap = (ent.cmap or {}) if ent is not None else {}
-        for col, op, value in self._prune_filters:
-            st = cols.get(cmap.get(col, col))
-            if st is None or len(st.get("min", [])) != n_pages:
-                continue
-            lo_, hi_, nulls_ = st["min"], st["max"], st["nulls"]
-            for i in range(n_pages):
-                if keep[i] and not stats_mod.page_may_match(
-                    op, value, lo_[i], hi_[i], nulls_[i], page_rows[i]
-                ):
-                    keep[i] = False
-            # bloom pass (point lookups): min/max can't prune an unsorted
-            # high-cardinality column — every page's range spans the
-            # domain — but a per-page bloom answers eq/in membership. No
-            # false negatives, so this only ever REMOVES pages the value
-            # cannot be in.
-            bl = st.get("bloom")
-            if op not in ("eq", "in") or not bl:
-                continue
-            pages_b64 = bl.get("pages", [])
-            if len(pages_b64) != n_pages:
-                continue
-            keys = [
-                stats_mod.bloom_key(v)
-                for v in (value if op == "in" else [value])
-            ]
-            if any(k is None for k in keys):
-                continue  # value outside the bloom domain: no pruning
-            for i in range(n_pages):
-                if not keep[i] or pages_b64[i] is None:
-                    continue
-                if not any(
-                    stats_mod.bloom_may_contain(pages_b64[i], k)
-                    for k in keys
-                ):
-                    keep[i] = False
-        return keep
 
     def partitions(self):
         from quiver_spark.format import nested as nested_mod
@@ -1078,23 +854,6 @@ class QuiverScanReader(DataSourceReader):
             ]
         if self.changes_since is not None:
             files = _files_changed_since(files, man, self.changes_since)
-        if self._part_filters:
-            # directory-level pruning: non-matching files are dropped
-            # before their footer is even opened — at 100 TB this is what
-            # turns a partition-key filter into O(matching files) I/O
-            files = [
-                f
-                for f in files
-                if _part_matches(
-                    self._part_filters,
-                    dict(
-                        zip(
-                            (c for c, _k in part_cols),
-                            per_file.get(f, ()),
-                        )
-                    ),
-                )
-            ]
         if self.limit is None:
             _prefetch_footers(files, man)
         file_plans: list[dict] = []
@@ -1156,28 +915,22 @@ class QuiverScanReader(DataSourceReader):
                 )
                 for i in range(n_pages)
             ]
-            keep = self._page_keep_mask(file, n_pages, man=man)
             file_plans.append(
                 {
                     "file": file,
                     "pages": pages,
                     "page_bytes": page_bytes,
-                    "keep": keep,
                     "nested_first": nested_first,
                 }
             )
-            total_bytes += sum(
-                b for i, b in enumerate(page_bytes) if keep[i]
-            )
+            total_bytes += sum(page_bytes)
             if nested_first:
                 # nested leaves store SLOT counts in num_values (reference
                 # common.rs:103-107), an over-count of rows — a limit
                 # cannot stop file collection early on slot counts
                 planned_rows = -(1 << 62) if self.limit is not None else 0
             else:
-                planned_rows += sum(
-                    p.num_values for i, p in enumerate(pages) if keep[i]
-                )
+                planned_rows += sum(p.num_values for p in pages)
 
         # --- dynamic split floor (see __init__ rationale) ---
         if self.min_partition_bytes is not None:
@@ -1222,18 +975,13 @@ class QuiverScanReader(DataSourceReader):
             if stop or (budget is not None and budget <= 0):
                 break
             file, pages = fp["file"], fp["pages"]
-            page_bytes, keep = fp["page_bytes"], fp["keep"]
+            page_bytes = fp["page_bytes"]
             if budget is not None and fp["nested_first"]:
                 # slot-count overcount (see pass 1): fall back to the lazy
                 # decode budget only
                 budget = None
             cur[0], cur[2] = file, pspec(file)
             for i, p in enumerate(pages):
-                if not keep[i]:
-                    # pruned gap: the chunk closes but the PARTITION keeps
-                    # filling (ranges are per-chunk, a gap costs nothing)
-                    close_chunk(i)
-                    continue
                 if cur[1] is None:
                     cur[1] = i
                 rows += p.num_values
@@ -1257,7 +1005,7 @@ class QuiverScanReader(DataSourceReader):
                 close_chunk(len(pages))
         flush()
         if not parts:
-            # empty / fully-pruned dataset: single no-op partition so Spark
+            # empty dataset: single no-op partition so Spark
             # gets a schema'd empty result
             files = _list_files(self.path)
             parts.append(QuiverPartition(files[0], 0, 0, pspec(files[0])))
@@ -2477,10 +2225,4 @@ def register(spark) -> None:
     if key in _REGISTERED_SESSIONS:
         return
     spark.dataSource.register(QuiverDataSource)
-    try:
-        # our reader implements pushFilters, which Spark refuses to plan
-        # unless this conf is on — required for ANY session reading quiver
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
     _REGISTERED_SESSIONS.add(key)

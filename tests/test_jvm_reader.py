@@ -431,8 +431,8 @@ def test_jvm_rejects_heterogeneous_schemas(spark, tmp_path):
 
 def test_jvm_zone_map_page_pruning(spark, tmp_path):
     """Pushed predicates prune page ranges at plan time from the
-    manifest-inlined sidecars (zero extra plan I/O) with format/stats.py
-    page_may_match semantics — and NEVER change results: every filter is
+    manifest-inlined sidecars (zero extra plan I/O), skipping a page only
+    when no row can match — and NEVER change results: every filter is
     also re-evaluated row-level by Spark above the scan."""
     _require_jar(spark)
     from pyspark.sql import functions as F

@@ -248,47 +248,6 @@ def test_arrow_merge_schemas_unions_by_name(spark, tmp_path):
     assert df1.columns == ["a"]
 
 
-def test_page_prune_uses_manifest_sidecar(spark, tmp_path, monkeypatch):
-    d = str(tmp_path / "tp")
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    _write_sink(
-        spark,
-        li.orderBy("l_orderkey"),
-        d,
-        max_page_size="512",
-    )
-    root = _data_root(d)
-    man = load_manifest(root)
-    f = _list_files(d)[0]
-    ent = man.lookup(f)
-    assert ent is not None and ent.sidecar is not None
-
-    from quiver_spark.format import stats as stats_mod
-
-    loads = []
-    real = stats_mod.load_sidecar
-
-    def counting(path):
-        loads.append(path)
-        return real(path)
-
-    monkeypatch.setattr(stats_mod, "load_sidecar", counting)
-    reader = QuiverScanReader({"path": d, "page_prune": "true"}, None)
-
-    class Gt:
-        attribute = ("l_orderkey",)
-        value = 10**9  # prunes everything
-
-    Gt.__name__ = "GreaterThan"
-    reader.pushFilters([Gt()])
-    parts = reader.partitions()
-    assert loads == []  # sidecar served from the manifest
-    # fully pruned → single empty anchor partition
-    assert len(parts) == 1 and parts[0].page_end == parts[0].page_start
-
-
 def test_manifest_cli_verify_and_rebuild(spark, nation_df, tmp_path, capsys):
     from quiver_spark.tools import main
 

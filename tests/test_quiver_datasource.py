@@ -16,6 +16,20 @@ from quiver_spark.sources.quiver_datasource import _data_root
 from conftest import SF_DIR
 
 
+def _routed_scan(spark, d):
+    """``sources.scan`` of ``d`` — the router every internal read uses —
+    asserted to be served by the JVM reader, the engine that prunes."""
+    from quiver_spark.sources import scan
+
+    df = scan(spark, d)
+    assert "quiverjvm" in df._jdf.queryExecution().analyzed().toString()
+    return df
+
+
+def _jvm_read(spark):
+    return spark._jvm.io.quiverspark.QuiverJvmRead
+
+
 @pytest.fixture(scope="module")
 def quiver_lineitem_dir(spark, tmp_path_factory):
     """lineitem converted parquet → quiver via the library writer."""
@@ -130,33 +144,21 @@ def test_spark_write_roundtrip(spark, tmp_path):
 
 
 def test_page_pruning_sorted_column(spark, tmp_path):
-    """A selective predicate on a sort-clustered column prunes pages before
-    partitions are scheduled, and results still match exactly."""
-    from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
-
-    from quiver_spark.sources.quiver_datasource import QuiverScanReader
-
+    """A selective predicate on a sort-clustered column prunes pages in the
+    routed (JVM) scan, and results still match exactly."""
     d = tmp_path / "li_sorted"
     os.makedirs(d, exist_ok=True)
     t = pq.read_table(f"{SF_DIR}/lineitem.parquet").sort_by("l_orderkey")
     write_table(t, str(d / "part-0.quiver"), WriteOptions(max_page_size=500))
     register(spark)
 
-    # driver-side: the pruning mask shrinks the partition list
-    opts = {"path": str(d), "partition_rows": "500", "page_prune": "true"}
-    r_all = QuiverScanReader(dict(opts), None)
-    n_all = len(r_all.partitions())
-    r_f = QuiverScanReader(dict(opts), None)
-    r_f.pushFilters([LessThan(("l_orderkey",), 100)])
-    n_f = len(r_f.partitions())
-    assert n_f < n_all
-    # page ranges shrink too (not just partition grouping)
-    pages_f = sum(p.page_end - p.page_start for p in r_f.partitions())
-    pages_all = sum(p.page_end - p.page_start for p in r_all.partitions())
-    assert pages_f < pages_all
+    q = _routed_scan(spark, str(d))
+    J = _jvm_read(spark)
+    J.resetPagesPruned()
+    assert q.filter("l_orderkey < 100").count() > 0
+    assert J.pagesPruned() > 0, "sorted range scan must prune pages"
 
     # end-to-end equality vs parquet for several pushable predicates
-    q = spark.read.format("quiver").option("page_prune", "true").load(str(d))
     p = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     for cond in [
         "l_orderkey < 100",
@@ -174,7 +176,7 @@ def test_pruning_with_date_filter(spark, tmp_path):
     t = pq.read_table(f"{SF_DIR}/lineitem.parquet").sort_by("l_shipdate")
     write_table(t, str(d / "part-0.quiver"), WriteOptions(max_page_size=500))
     register(spark)
-    q = spark.read.format("quiver").option("page_prune", "true").load(str(d))
+    q = _routed_scan(spark, str(d))
     p = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     cond = "l_shipdate >= timestamp'1998-01-01'"
     assert q.filter(cond).count() == p.filter(cond).count()
@@ -199,17 +201,30 @@ def test_pruning_never_drops_nan_rows(spark, tmp_path):
     lo, hi, _, _s = page_stats(pa.array([1.0, 2.0, 3.0]))
     assert lo == 1.0 and hi == 3.0
 
-    # end-to-end: filter x > 5.0 must keep the NaN row (Spark: NaN > 5.0)
+    # end-to-end through the router's JVM reader, for a file from the
+    # library writer AND one from the unified sink: x > 5.0 must keep the
+    # NaN row (Spark: NaN > 5.0)
+    from quiver_spark.sources import write
+
     d = tmp_path / "nan_pages"
     os.makedirs(d, exist_ok=True)
     t = pa.table({"x": pa.array([1.0, float("nan"), 2.0, 3.0], pa.float64())})
     write_table(t, str(d / "part-0.quiver"), WriteOptions(max_page_size=2))
     register(spark)
-    q = spark.read.format("quiver").option("page_prune", "true").load(str(d))
-    assert q.filter("x > 5.0").count() == 1
-    assert q.filter("x >= 5.0").count() == 1
-    assert q.filter("x = double('NaN')").count() == 1
-    assert q.filter("x < 5.0").count() == 3
+    sunk = str(tmp_path / "nan_sink")
+    assert write(
+        spark.createDataFrame(
+            [(v,) for v in t.column("x").to_pylist()], "x double"
+        ).coalesce(1),
+        sunk,
+        max_page_size="2",
+    ) == "quiverjvm"
+    for table in (str(d), sunk):
+        q = _routed_scan(spark, table)
+        assert q.filter("x > 5.0").count() == 1, table
+        assert q.filter("x >= 5.0").count() == 1, table
+        assert q.filter("x = double('NaN')").count() == 1, table
+        assert q.filter("x < 5.0").count() == 3, table
 
 
 def test_limit_short_circuit(spark, tmp_path):
@@ -253,11 +268,11 @@ def test_limit_short_circuit(spark, tmp_path):
 
 
 def test_plan_cache_replay_is_safe_by_default(spark, tmp_path):
-    """The documented PythonDataSourceV2 sharp edge, defused: with pruning
-    off by default, re-using ONE loaded DataFrame for a filtered query and
+    """The PythonDataSourceV2 plan-cache replay, defused: this reader never
+    prunes, so re-using ONE loaded DataFrame for a filtered query and
     then an unfiltered one must return the FULL table — even though Spark
-    replays the filtered build's cached plan. (With page_prune=true this
-    exact sequence used to return only the filtered query's pages.)"""
+    replays the filtered build's cached plan. (A reader that pruned pages
+    from pushed filters would return only the filtered query's pages.)"""
     d = tmp_path / "li_reuse"
     os.makedirs(d, exist_ok=True)
     t = pq.read_table(f"{SF_DIR}/lineitem.parquet").sort_by("l_orderkey")
@@ -357,11 +372,9 @@ def test_hive_partitioned_write_read(spark, tmp_path):
 
 
 def test_hive_partition_prune_skips_files(spark, tmp_path):
-    """With partition_prune=true, a filter on the partition key plans only
-    the matching files' partitions — directory-level pruning before any
-    footer or page is read."""
-    from quiver_spark.sources.quiver_datasource import QuiverScanReader
-
+    """A filter on the partition key, through the router, returns exactly
+    the matching partition's rows (the JVM reader drops the other
+    partitions' files at plan time)."""
     register(spark)
     out = str(tmp_path / "docs_pruned")
     p = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -375,37 +388,11 @@ def test_hive_partition_prune_skips_files(spark, tmp_path):
     assert len(langs) > 1
     target = sorted(langs)[0]
 
-    class FakeEq:  # duck-typed pushed filter (pyspark.sql.datasource.EqualTo)
-        attribute = ("lang",)
-        value = target
-
-    FakeEq.__name__ = "EqualTo"
-
-    def planned_files(parts):
-        # partitions pack multiple files' page ranges (QuiverPartition
-        # .extra) — count every chunk's file, not just the head chunk
-        out_files = set()
-        for pt in parts:
-            out_files.add(pt.file)
-            out_files.update(c[0] for c in pt.extra)
-        return out_files
-
-    r = QuiverScanReader({"path": out, "partition_prune": "true"}, None)
-    r.pushFilters([FakeEq()])
-    files = planned_files(r.partitions())
-    assert files and all(f"lang={target}" in f for f in files)
-    r_all = QuiverScanReader({"path": out}, None)
-    assert len(planned_files(r_all.partitions())) > len(files)
-
-    # end-to-end correctness (fresh relation per query, like quiver_table)
-    got = (
-        spark.read.format("quiver")
-        .option("partition_prune", "true")
-        .load(out)
-        .filter(F.col("lang") == target)
-        .count()
-    )
-    assert got == p.filter(F.col("lang") == target).count()
+    got = _routed_scan(spark, out).filter(F.col("lang") == target)
+    assert got.count() == p.filter(F.col("lang") == target).count()
+    # the key filter was accepted as a whole-file partition filter
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "partitionFilters:" in plan, plan
 
 
 def test_hive_partition_types_and_null(spark, tmp_path):
@@ -532,20 +519,16 @@ def test_spark_writer_open_competition_can_choose_patas(spark, tmp_path):
 
 
 def test_shared_relation_filter_correctness(spark):
-    """The cached (pruning-off) relation must answer full → filtered → full
-    correctly: Spark's PythonDataSourceV2 replays the most recent planned
-    read for a reused DataFrame, so ONLY a reader whose partitions are
-    filter-independent may be shared. This is the invariant that gates
-    quiver_table's catalog-style relation cache (a page_prune reader
-    verifiably fails this exact sequence — see the module SHARP EDGE note).
-    """
+    """One quiver_table relation, reused, must answer full → filtered →
+    full correctly: the pruning happens per query (the JVM reader's
+    ScanBuilder), so no filtered plan can leak into a later unfiltered
+    one."""
     import pyspark.sql.functions as F
 
     from conftest import SF_DIR
     from quiver_spark.operators.format_queries import quiver_table
 
     df = quiver_table(spark, SF_DIR, "lineitem")
-    assert df is quiver_table(spark, SF_DIR, "lineitem"), "relation not cached"
     full = df.count()
     cutoff = F.lit("1998-06-01").cast("timestamp_ntz")
     filt = df.filter(F.col("l_shipdate") >= cutoff).count()
@@ -660,42 +643,6 @@ def test_enable_on_plain_session(tmp_path):
     src.write.format("quiver").mode("overwrite").save(d)
     back = spark.read.format("quiver").load(d)
     assert sorted(r.id for r in back.collect()) == list(range(100))
-
-
-def test_plan_cache_stale_replay_sentinel(spark, tmp_path):
-    """SENTINEL pinning the upstream Spark behavior that forces page_prune
-    to stay opt-in (module SHARP EDGE note; 4.1.2 bytecode:
-    PythonDataSourceV2.getOrCreateReadInfo returns its single cached
-    readInfo slot whenever non-null, and only a pushdown build overwrites
-    it). With page_prune=true on a reused DataFrame, a no-filter query
-    after a filtered one replays the filtered build's pruned partitions and
-    under-counts — while a DIFFERENTLY-filtered query re-plans and stays
-    correct.
-
-    If the under-count assertion ever FAILS, Spark fixed the plan caching:
-    flip the page_prune / partition_prune defaults to on and retire this
-    test."""
-    d = tmp_path / "li_sentinel"
-    os.makedirs(d, exist_ok=True)
-    t = pq.read_table(f"{SF_DIR}/lineitem.parquet").sort_by("l_orderkey")
-    write_table(t, str(d / "part-0.quiver"), WriteOptions(max_page_size=500))
-    register(spark)
-    q = spark.read.format("quiver").option("page_prune", "true").load(str(d))
-    truth = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    n_filtered = q.filter("l_orderkey >= 100").count()
-    assert n_filtered == truth.filter("l_orderkey >= 100").count()
-    # differently-filtered reuse re-plans through pushFilters: always correct
-    # (this one prunes hard: sorted file, < 100 matches only the first page)
-    n_refiltered = q.filter("l_orderkey < 100").count()
-    assert n_refiltered == truth.filter("l_orderkey < 100").count()
-    # the unsafe direction: zero-pushable-filter reuse replays the LAST
-    # build's (heavily pruned) partitions
-    n_full_stale = q.count()
-    assert n_full_stale < truth.count(), (
-        "Spark no longer replays stale pruned partitions for a no-filter "
-        "query — the upstream plan-cache bug is fixed. Flip page_prune/"
-        "partition_prune defaults to ON and retire this sentinel."
-    )
 
 
 def test_ddl_catalog_table_sentinel(spark, tmp_path):
@@ -1196,9 +1143,6 @@ def test_bloom_point_lookup_prunes_unsorted_pages(spark, tmp_path):
     import random
 
     import pyarrow as pa
-    from pyspark.sql.datasource import EqualTo, In
-
-    from quiver_spark.sources.quiver_datasource import QuiverScanReader
 
     d = tmp_path / "bloomed"
     os.makedirs(d, exist_ok=True)
@@ -1218,27 +1162,13 @@ def test_bloom_point_lookup_prunes_unsorted_pages(spark, tmp_path):
     )
     register(spark)
 
-    opts = {"path": str(d), "partition_rows": "1000", "page_prune": "true"}
-
-    def planned_pages(filters):
-        r = QuiverScanReader(dict(opts), None)
-        if filters:
-            r.pushFilters(filters)
-        return sum(p.page_end - p.page_start for p in r.partitions())
-
-    all_pages = planned_pages(None)
-    assert all_pages == 20
-    # min/max alone cannot prune the shuffled column — the bloom must
-    eq_pages = planned_pages([EqualTo(("uid",), 12345)])
-    assert eq_pages <= 3, eq_pages
-    in_pages = planned_pages([In(("uid",), (7, 19999, 4242))])
-    assert in_pages <= 6, in_pages
-    str_pages = planned_pages([EqualTo(("tag",), "k-777")])
-    assert str_pages <= 3, str_pages
-
-    # exactness end-to-end (no false negatives anywhere)
-    q = spark.read.format("quiver").option("page_prune", "true").load(str(d))
+    # min/max alone cannot prune the shuffled column — the bloom must,
+    # and no key may be lost (blooms have no false negatives)
+    q = _routed_scan(spark, str(d))
+    J = _jvm_read(spark)
+    J.resetPagesPruned()
     assert q.filter("uid = 12345").count() == 1
+    assert J.pagesPruned() > 0, "bloom must prune pages min/max cannot"
     assert sorted(
         r.tag for r in q.filter("uid IN (7, 19999, 4242)").collect()
     ) == ["k-19999", "k-4242", "k-7"]
@@ -1271,8 +1201,11 @@ def test_bloom_through_sink_option(spark, tmp_path):
     man = load_manifest(root)
     ent = man.lookup(_list_files(root)[0])
     assert ent is not None and "bloom" in ent.sidecar["columns"]["id"]
-    q = spark.read.format("quiver").option("page_prune", "true").load(out)
+    q = _routed_scan(spark, out)
+    J = _jvm_read(spark)
+    J.resetPagesPruned()
     assert q.filter("id = 4321").count() == 1
+    assert J.pagesPruned() > 0, "the sink's blooms must prune pages"
 
 
 def test_require_not_null_constraint(spark, tmp_path):

@@ -421,3 +421,81 @@ def test_merge_with_delete_predicate_applies_cdc_feed(spark, tmp_path):
     assert len(rows) == 10  # 10 base - 1 deleted + 1 inserted
     for i in (0, 1, 2, 4, 6, 7, 8, 9):
         assert rows[i] == (i % 7, f"row-{i}")
+
+
+def test_dml_on_table_with_quiver_file_data_column(spark, tmp_path):
+    """A DATA column named ``_quiver_file`` shadows the JVM reader's
+    file-identity metadata column, so the router serves the touched-file
+    detection scan from the (unpruned) Python DS. DELETE, UPDATE and MERGE
+    on such a table must still leave exactly the rows a DuckDB replay of
+    the same statements leaves, and rewrite only the files holding
+    matches."""
+    import duckdb
+
+    from quiver_spark.sources import scan
+
+    tbl = str(tmp_path / "t")
+    for k, lo in enumerate(range(0, 300, 100)):
+        spark.range(lo, lo + 100).select(
+            F.col("id"),
+            (F.col("id") % 7).alias("grp"),
+            F.concat(F.lit("data-"), F.col("id")).alias("_quiver_file"),
+        ).coalesce(1).write.format("quiver").mode(
+            "overwrite" if k == 0 else "append"
+        ).save(tbl)
+
+    def engine(df):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return "jvm" if "quiverjvm" in plan else "python"
+
+    assert engine(scan(spark, tbl)) == "jvm"
+    assert engine(scan(spark, tbl, file_column="_src")) == "python"
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE t AS SELECT i AS id, i % 7 AS grp, "
+        "'data-' || i AS _quiver_file FROM range(300) r(i)"
+    )
+
+    def check():
+        want = sorted(
+            con.execute("SELECT id, grp, _quiver_file FROM t").fetchall()
+        )
+        got = sorted(
+            (r.id, r.grp, r._quiver_file)
+            for r in spark.read.format("quiver").load(tbl).collect()
+        )
+        assert got == want
+
+    res = maintenance.delete_where(spark, tbl, "id >= 10 AND id < 20")
+    con.execute("DELETE FROM t WHERE id >= 10 AND id < 20")
+    assert res["files_rewritten"] == 1
+    check()
+
+    res = maintenance.update_where(
+        spark,
+        tbl,
+        {"grp": "grp + 100", "_quiver_file": "upper(_quiver_file)"},
+        "id >= 150 AND id < 160",
+    )
+    con.execute(
+        "UPDATE t SET grp = grp + 100, _quiver_file = upper(_quiver_file) "
+        "WHERE id >= 150 AND id < 160"
+    )
+    assert res["files_rewritten"] == 1
+    check()
+
+    source = spark.createDataFrame(
+        [(5, 50, "merged-5"), (250, 99, "merged-250"), (400, 4, "new-400")],
+        "id long, grp long, _quiver_file string",
+    )
+    res = maintenance.merge_upsert(spark, tbl, source, on=["id"])
+    con.execute(
+        "CREATE TABLE src AS SELECT * FROM (VALUES "
+        "(5, 50, 'merged-5'), (250, 99, 'merged-250'), (400, 4, 'new-400'))"
+        " v(id, grp, _quiver_file)"
+    )
+    con.execute("DELETE FROM t WHERE id IN (SELECT id FROM src)")
+    con.execute("INSERT INTO t SELECT * FROM src")
+    assert res["files_rewritten"] == 2
+    check()
